@@ -574,6 +574,18 @@ class WheelEngine:
         self.index_epoch += 1
         return keys
 
+    def _build_sketches(self, **kw) -> dict[str, dict]:
+        """The one sketch build (:func:`.operators.sketch_retention.
+        build_sketch_rollups`) over this engine's table, every handle
+        registered for the ``approx_*`` asks."""
+        from .operators.sketch_retention import build_sketch_rollups
+
+        out = build_sketch_rollups(self.df, self.time_column, **kw)
+        self.distinct_rollups.update(out["distinct"])
+        self.quantile_rollups.update(out["quantile"])
+        self.theta_rollups.update(out["theta"])
+        return out
+
     def build_distinct_index(
         self,
         column: str,
@@ -589,16 +601,9 @@ class WheelEngine:
         ``partition_by=key`` adds the dimensional form: per-key estimates
         via :meth:`approx_distinct_by_key` / ``key=`` restrictions from the
         same single build."""
-        from .operators.distinct import build_distinct_rollup
-
-        if not hasattr(self, "distinct_rollups"):
-            self.distinct_rollups: dict = {}
-        r = build_distinct_rollup(
-            self.df, self.time_column, column,
-            bucket_seconds=bucket_seconds, lg_k=lg_k, partition_by=partition_by,
-        )
-        self.distinct_rollups[column] = r
-        return r
+        return self.build_distinct_indexes(
+            [column], bucket_seconds, lg_k, partition_by
+        )[column]
 
     def build_distinct_indexes(
         self,
@@ -610,14 +615,10 @@ class WheelEngine:
         """N columns' HLL rollups in ONE table scan (the multi-column
         one-pass discipline applied to sketches). Registers every column
         for :meth:`approx_distinct` asks."""
-        from .operators.distinct import build_distinct_rollups
-
-        rollups = build_distinct_rollups(
-            self.df, self.time_column, list(columns),
-            bucket_seconds=bucket_seconds, lg_k=lg_k, partition_by=partition_by,
-        )
-        self.distinct_rollups.update(rollups)
-        return rollups
+        return self._build_sketches(
+            distinct=columns, bucket_seconds=bucket_seconds, lg_k=lg_k,
+            partition_by=partition_by,
+        )["distinct"]
 
     def build_theta_index(
         self,
@@ -635,14 +636,10 @@ class WheelEngine:
         discipline as the HLL rollups (KeyError when absent).
         ``partition_by=key`` adds :meth:`theta_retained_by_key` cohort
         tables from the same build."""
-        from .operators.theta import build_theta_rollup
-
-        r = build_theta_rollup(
-            self.df, self.time_column, column,
-            bucket_seconds=bucket_seconds, lg_k=lg_k, partition_by=partition_by,
-        )
-        self.theta_rollups[column] = r
-        return r
+        return self._build_sketches(
+            theta=[column], bucket_seconds=bucket_seconds, lg_k=lg_k,
+            partition_by=partition_by,
+        )["theta"][column]
 
     def build_topk_index(
         self,
@@ -971,14 +968,9 @@ class WheelEngine:
         the KLL rank-error bound (~1.65% at k=200) and come from a tiny job
         over the cached rollup, never a scan of the table. Integral columns
         keep exact int64 sketch values."""
-        from .operators.quantiles import build_quantile_rollup
-
-        r = build_quantile_rollup(
-            self.df, self.time_column, column,
-            bucket_seconds=bucket_seconds, k=k, partition_by=partition_by,
-        )
-        self.quantile_rollups[column] = r
-        return r
+        return self.build_quantile_indexes(
+            [column], bucket_seconds, k, partition_by
+        )[column]
 
     def build_quantile_indexes(
         self,
@@ -990,14 +982,10 @@ class WheelEngine:
         """N columns' KLL rollups in ONE table scan (the multi-column
         one-pass discipline of :meth:`build_indexes` applied to sketches).
         Registers every column for :meth:`approx_quantile` asks."""
-        from .operators.quantiles import build_quantile_rollups
-
-        rollups = build_quantile_rollups(
-            self.df, self.time_column, list(columns),
-            bucket_seconds=bucket_seconds, k=k, partition_by=partition_by,
-        )
-        self.quantile_rollups.update(rollups)
-        return rollups
+        return self._build_sketches(
+            quantile=columns, bucket_seconds=bucket_seconds, k=k,
+            partition_by=partition_by,
+        )["quantile"]
 
     def build_sketch_indexes(
         self,
@@ -1020,18 +1008,11 @@ class WheelEngine:
         order-independent; KLL carries its usual rank-error bound).
         Returns ``{"distinct": {...}, "quantile": {...}, "theta": {...}}``.
         """
-        from .operators.multibuild import build_sketch_rollups
-
-        out = build_sketch_rollups(
-            self.df, self.time_column,
+        return self._build_sketches(
             distinct=distinct, quantile=quantile, theta=theta,
             bucket_seconds=bucket_seconds, lg_k=lg_k, k=k,
             partition_by=partition_by,
         )
-        self.distinct_rollups.update(out["distinct"])
-        self.quantile_rollups.update(out["quantile"])
-        self.theta_rollups.update(out["theta"])
-        return out
 
     def approx_quantile(self, column: str, q, start, end, **kw):
         """Estimated ``q``-quantile(s) of ``column`` over ``[start, end)``

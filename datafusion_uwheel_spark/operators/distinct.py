@@ -20,14 +20,10 @@ lgK=12; raise ``lg_k`` for tighter estimates).
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .rollups import time_sec_col
-from .sketch_retention import SketchRetention
+from .sketch_retention import SketchRetention, _reads_storage, build_sketch_rollups
 
 __all__ = [
     "DistinctRollup",
@@ -36,12 +32,6 @@ __all__ = [
     "load_distinct_rollup",
 ]
 
-_META = "_distinct_meta.json"
-#: Cached-rollup partition count — small enough that probes run at the
-#: task-launch floor (the shuffle-partition default made every estimate
-#: schedule ~33 tasks), large enough to parallelize a multi-year rollup.
-_CACHE_PARTITIONS = 4
-
 
 class DistinctRollup(SketchRetention):
     """Handle over a cached per-bucket HLL sketch table.
@@ -49,6 +39,10 @@ class DistinctRollup(SketchRetention):
     ``approx_distinct(a, b)`` answers ``COUNT(DISTINCT col)`` over
     ``[a, b)`` (second-aligned bounds, like every wheel lookup) by merging
     the bucket sketches — one tiny Spark job over the cached rollup."""
+
+    _STATE = "__hll"
+    _META = "_distinct_meta.json"
+    _PARAMS = ("lg_k",)
 
     def __init__(
         self,
@@ -75,16 +69,6 @@ class DistinctRollup(SketchRetention):
     #: for one concept forced a translation at every call site)
     _NO_KEY = SketchRetention._NO_ASK
 
-    def _restrict(self, start, end, key=_NO_KEY):
-        df = self._df.filter(self._range_filter(start, end))
-        if key is not DistinctRollup._NO_KEY:
-            if self.key_column is None:
-                raise ValueError(
-                    "rollup was built without partition_by — no key column"
-                )
-            df = df.filter(F.col("__key").eqNullSafe(F.lit(key)))
-        return df
-
     def _jvm_merge_grouped(self, ops):
         """Day-tier pre-merge (r12): HLL register/coupon union is
         associative, so the tier's final REGISTER STATE is identical to a
@@ -96,19 +80,6 @@ class DistinctRollup(SketchRetention):
         documented direct-vs-job contract (r11 probe: six update orders
         of one real day's sketches → six estimates in [1318, 1330])."""
         return ops.hllMergeGrouped
-
-    def _range_filter(self, start, end):
-        """Bucket filter covering ``[start, end)``: a bucket ``[s, s+w)``
-        intersects the range iff ``s > a - w`` and ``s < b`` — so partial
-        edge buckets on BOTH sides are included whole (superset semantics;
-        estimates never undercount against unaligned bounds)."""
-        a = F.unix_timestamp(F.lit(start).cast("timestamp"))
-        b = F.unix_timestamp(F.lit(end).cast("timestamp"))
-        # per-row width: compacted (coarser) buckets widen the slop so a
-        # coarse bucket spanning the range start is still included whole
-        return (F.col("__sec") > a - self._width_expr()) & (
-            F.col("__sec") < b
-        )
 
     def approx_distinct(self, start, end, key=_NO_KEY) -> int:
         """Estimated distinct count of ``column`` in ``[start, end)``
@@ -156,6 +127,7 @@ class DistinctRollup(SketchRetention):
             compute,
         )
 
+    @_reads_storage
     def approx_distinct_by_key(self, start=None, end=None) -> DataFrame:
         """Per-key distinct estimates over an optional ``[start, end)``
         restriction — the dimensional form (distinct users per segment).
@@ -163,17 +135,10 @@ class DistinctRollup(SketchRetention):
         ``(<key_column>, approx_distinct)`` ordered by key (NULL keys
         included); one tiny job over the cached sketch table."""
         self._require_fresh()
-        if self.key_column is None:
-            raise ValueError(
-                "rollup was built without partition_by — no key column"
-            )
-        df = self._df
-        if start is not None or end is not None:
-            df = df.filter(
-                self._range_filter(start or "1970-01-01", end or "9999-01-01")
-            )
+        self._require_key()
         return (
-            df.groupBy(F.col("__key").alias(self.key_column))
+            self._restrict_open(start, end)
+            .groupBy(F.col("__key").alias(self.key_column))
             .agg(
                 F.hll_sketch_estimate(F.hll_union_agg("__hll"))
                 .cast("long")
@@ -182,6 +147,7 @@ class DistinctRollup(SketchRetention):
             .orderBy(self.key_column)
         )
 
+    @_reads_storage
     def approx_distinct_by(
         self, granularity, start=None, end=None
     ) -> DataFrame:
@@ -198,21 +164,10 @@ class DistinctRollup(SketchRetention):
         coarser bucketing is exact sketch algebra — no rescan, no second
         rollup build."""
         self._require_fresh()
-        ts = F.timestamp_seconds(F.col("__sec"))
-        self._check_granularity(granularity, start)
-        if isinstance(granularity, int):
-            bucket = F.timestamp_seconds(
-                F.col("__sec") - F.col("__sec") % F.lit(granularity)
-            )
-        else:
-            bucket = F.date_trunc(str(granularity), ts)
-        df = self._df
-        if start is not None or end is not None:
-            df = df.filter(
-                self._range_filter(start or "1970-01-01", end or "9999-01-01")
-            )
+        bucket = self._period_col(granularity, start)
         return (
-            df.groupBy(bucket.alias("bucket"))
+            self._restrict_open(start, end)
+            .groupBy(bucket.alias("bucket"))
             .agg(
                 F.hll_sketch_estimate(F.hll_union_agg("__hll"))
                 .cast("long")
@@ -232,10 +187,7 @@ class DistinctRollup(SketchRetention):
         the rollup mutates. Estimate-regime caveat as
         :meth:`distinct_rows_by`."""
         self._require_fresh()
-        if self.key_column is None:
-            raise ValueError(
-                "rollup was built without partition_by — no key column"
-            )
+        self._require_key()
 
         def compute() -> list[tuple]:
             gc = self._keyed_cells("__hll", start, end)
@@ -318,99 +270,12 @@ class DistinctRollup(SketchRetention):
             compute,
         )
 
-    def merged_sketch(self, start, end) -> bytes | None:
-        """The merged HLL sketch bytes for ``[start, end)`` — composable
-        with sketches from other tables/partitions (union-merge downstream,
-        e.g. cross-dataset dedup accounting). Same both-edges-whole bucket
-        coverage as :meth:`approx_distinct`. Memoized like it."""
-        self._require_fresh()
-
-        def compute() -> bytes | None:
-            row = (
-                self._df.filter(self._range_filter(start, end))
-                .agg(F.hll_union_agg("__hll").alias("sk"))
-                .collect()[0]
-            )
-            return bytes(row["sk"]) if row["sk"] is not None else None
-
-        return self._memoized_ask(
-            ("sketch", self._ask_token(start), self._ask_token(end)), compute
-        )
+    def _sketch_agg(self):
+        return F.hll_sketch_agg(F.col(self.column), F.lit(self.lg_k))
 
     def _union_agg_exprs(self):
-        """Merge aggregation for :meth:`SketchRetention.compact_before` —
-        HLL union is exact sketch algebra."""
+        """HLL union is exact sketch algebra."""
         return [F.hll_union_agg("__hll").alias("__hll")]
-
-    def _merge_batch_locked(self, batch_df, time_column, StorageLevel) -> None:
-        """Merge a micro-batch of raw rows into the rollup — streaming
-        maintenance. HLL sketches are mergeable monoids, so the merged
-        rollup is indistinguishable from a fresh batch build over the union
-        (the same model as the wheel maintainers): the batch is sketched
-        per bucket with the pinned ``lg_k``, unioned with the stored
-        sketches, and re-merged by bucket with ``hll_union_agg``. Late data
-        simply lands in its bucket. The new rollup is materialized before
-        the old cache is released."""
-
-        sec = self._bucket_expr(time_sec_col(batch_df, time_column))
-        keys = [sec.alias("__sec")]
-        if self.key_column is not None:
-            if self.key_column not in batch_df.columns:
-                raise ValueError(
-                    f"batch lacks partition column {self.key_column!r} — a "
-                    "keyed rollup cannot be maintained without it"
-                )
-            keys.append(F.col(self.key_column).alias("__key"))
-        delta = (
-            batch_df.filter(F.col(time_column).isNotNull())
-            .groupBy(*keys)
-            .agg(F.hll_sketch_agg(F.col(self.column), F.lit(self.lg_k)).alias("__hll"))
-        )
-        group = ["__sec"] + (["__key"] if self.key_column is not None else [])
-        merged = (
-            self._df.unionByName(delta)
-            .groupBy(*group)
-            .agg(F.hll_union_agg("__hll").alias("__hll"))
-            .coalesce(_CACHE_PARTITIONS)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        merged.count()
-        old = self._df
-        self._df = merged
-        # A handle from a one-pass multi-column build shared the parent
-        # cache; it now owns a private persisted frame, so drop the claim
-        # (the parent is released when the last sibling detaches). Handles
-        # with a private frame release exactly the frame being replaced.
-        if not self._detach_shared():
-            old.unpersist()
-        self.invalidate_asks()
-        self._drop_mirror()
-
-    def save(self, path: str) -> str:
-        """Persist the sketch table as parquet (one distributed write) plus
-        a JSON sidecar pinning column/bucket/lg_k — without this a restart
-        silently loses the rollup and every estimate pays a rebuild scan.
-        Reload with :func:`load_distinct_rollup`."""
-        self._df.write.mode("overwrite").parquet(path)
-        with open(os.path.join(path, _META), "w") as f:
-            json.dump(
-                {
-                    "column": self.column,
-                    "bucket_seconds": self.bucket_seconds,
-                    "lg_k": self.lg_k,
-                    "key_column": self.key_column,
-                    **self._persist_meta(),
-                },
-                f,
-            )
-        return path
-
-    def unpersist(self) -> None:
-        # release the storage that actually holds the sketches: the shared
-        # one-pass parent (refcounted across sibling handles) or this
-        # handle's private frame
-        if not self._detach_shared():
-            self._df.unpersist()
 
 
 def build_distinct_rollup(
@@ -432,27 +297,9 @@ def build_distinct_rollup(
     work by unioning across keys (HLL union is idempotent, so values seen
     under several keys don't double-count). State grows to buckets ×
     distinct keys — meant for low-cardinality dimensional keys."""
-    from pyspark import StorageLevel
-
-    sec = time_sec_col(df, time_column)
-    if bucket_seconds != 1:
-        sec = sec - (sec % bucket_seconds)
-    keys = [sec.alias("__sec")]
-    if partition_by is not None:
-        keys.append(F.col(partition_by).alias("__key"))
-    rollup = (
-        df.filter(F.col(time_column).isNotNull())
-        .groupBy(*keys)
-        .agg(F.hll_sketch_agg(F.col(column), F.lit(lg_k)).alias("__hll"))
-        .coalesce(_CACHE_PARTITIONS)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    rollup.count()  # materialize once; probes never touch the raw table
-    r = DistinctRollup(
-        rollup, column, bucket_seconds, lg_k, key_column=partition_by
-    )
-    r._warm_mirror("__hll")  # zero-job direct asks from the start (r10)
-    return r
+    return build_distinct_rollups(
+        df, time_column, [column], bucket_seconds, lg_k, partition_by
+    )[column]
 
 
 def build_distinct_rollups(
@@ -467,64 +314,12 @@ def build_distinct_rollups(
     discipline applied to sketches): a single group-by aggregates one
     sketch per column per bucket; each handle selects its own column from
     the shared cached frame (``unpersist`` releases the parent)."""
-    from pyspark import StorageLevel
-
-    if not columns:
-        raise ValueError("columns must be non-empty")
-    sec = time_sec_col(df, time_column)
-    if bucket_seconds != 1:
-        sec = sec - (sec % bucket_seconds)
-    keys = [sec.alias("__sec")]
-    if partition_by is not None:
-        keys.append(F.col(partition_by).alias("__key"))
-    combined = (
-        df.filter(F.col(time_column).isNotNull())
-        .groupBy(*keys)
-        .agg(
-            *[
-                F.hll_sketch_agg(F.col(c), F.lit(lg_k)).alias(f"__hll{i}")
-                for i, c in enumerate(columns)
-            ]
-        )
-        .coalesce(_CACHE_PARTITIONS)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    combined.count()  # ONE materializing scan for all columns
-    out = {}
-    #: refcounted shared cache: released when the last sibling handle
-    #: unpersists or detaches via merge_batch
-    holder = {"df": combined, "refs": len(columns)}
-    base_cols = ["__sec"] + (["__key"] if partition_by is not None else [])
-    for i, c in enumerate(columns):
-        view = combined.select(*base_cols, F.col(f"__hll{i}").alias("__hll"))
-        out[c] = DistinctRollup(
-            view, c, bucket_seconds, lg_k, key_column=partition_by
-        )
-        out[c]._shared = holder
-    return out
+    return build_sketch_rollups(
+        df, time_column, distinct=columns, bucket_seconds=bucket_seconds,
+        lg_k=lg_k, partition_by=partition_by,
+    )["distinct"]
 
 
-def load_distinct_rollup(spark, path: str) -> DistinctRollup:
-    """Inverse of :meth:`DistinctRollup.save`: read the parquet sketch
-    table back into executor cache. Estimates are identical after reload —
-    the sketches are the state, not a derived view."""
-    from pyspark import StorageLevel
-
-    with open(os.path.join(path, _META)) as f:
-        meta = json.load(f)
-    df = (
-        spark.read.parquet(path)
-        .coalesce(_CACHE_PARTITIONS)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    df.count()
-    r = DistinctRollup(
-        df,
-        meta["column"],
-        meta["bucket_seconds"],
-        meta["lg_k"],
-        key_column=meta.get("key_column"),
-    )
-    r._restore_meta(meta)
-    r._warm_mirror("__hll")  # no-op on stale loads / shim-less sessions
-    return r
+#: Inverse of :meth:`DistinctRollup.save`; estimates are identical after
+#: reload — the sketches are the state, not a derived view.
+load_distinct_rollup = DistinctRollup.load

@@ -57,12 +57,16 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .rollups import time_sec_col
-from .sketch_retention import SketchRetention
+from .sketch_retention import (
+    SketchRetention,
+    _materialize,
+    _readers,
+    _reads_storage,
+)
 
 __all__ = ["FrequencyRollup", "build_frequency_rollup", "load_frequency_rollup"]
 
 _META = "_frequency_meta.json"
-_CACHE_PARTITIONS = 4
 #: Keyed-mirror memory guard: the kept driver mirror of a partition_by=
 #: build is buckets × capacity × KEYS rows, so the key cardinality — not
 #: the table size — is what can OOM the driver. 4096 keys × 64 capacity ×
@@ -94,6 +98,23 @@ def _check_key_cardinality(kept: DataFrame, key_column, max_keys) -> None:
             "(None disables the cap) if the product genuinely fits driver "
             "memory."
         )
+
+
+def _materialize_pair(kept: DataFrame, err: DataFrame, key_column, max_keys):
+    """Both frames of a rollup through :func:`_materialize`, then the
+    key-domain cap (``max_keys=None`` skips it): ``(kept, err,
+    kept_rows)``. On refusal both new frames are released and the
+    caller's state stays untouched (still fresh, still correct)."""
+    kept, rows = _materialize(kept)
+    err, _ = _materialize(err)
+    try:
+        _check_key_cardinality(kept, key_column, max_keys)
+    except ValueError:
+        kept.unpersist()
+        err.unpersist()
+        raise
+    return kept, err, rows
+
 
 #: Spark CAST(string AS DOUBLE) literal shape (no underscores, unlike
 #: Python float()); NaN/Infinity words are handled separately.
@@ -512,9 +533,6 @@ class FrequencyRollup(SketchRetention):
         self.key_column = key_column
         self._refresh_caches()
 
-    def _grp(self) -> list[str]:
-        return ["__sec"] + (["__key"] if self.key_column is not None else [])
-
     def _restore_meta(self, meta: dict) -> None:
         """Restoring tiers must re-capture (r11 review pass 6): the
         capture carries the gates' widths, so any restore path that
@@ -547,9 +565,6 @@ class FrequencyRollup(SketchRetention):
         halves so probes answer zero-job from the start (only STALE loads
         stay lazy — collects they could never serve)."""
         self._caches = _Caches(self._df, self._err, self.key_column, self.tiers)
-
-    # backwards-compatible alias (pre-r9 name, err-only mirror)
-    _refresh_err_cache = _refresh_caches
 
     def _canon_ask(self, item):
         """Canonicalize an ask argument; dict asks (struct columns) are
@@ -608,6 +623,7 @@ class FrequencyRollup(SketchRetention):
         hi = int(np.searchsorted(secs, b, side="left"))
         return int(prefix[hi] - prefix[lo])
 
+    @_reads_storage
     def total_err(self, start, end) -> int:
         """Σ per-bucket truncation error over the (aligned) range — the
         additive slack between ``est`` and ``upper``. 0 when every bucket
@@ -618,6 +634,7 @@ class FrequencyRollup(SketchRetention):
         a, b = self._range(start, end, c.tiers)
         return self._total_err(a, b, c.err_cache())
 
+    @_reads_storage
     def approx_topk(self, start, end, k: int = 10) -> DataFrame:
         """Top-``k`` items by estimated count over ``[start, end)`` as
         ``(item, est, upper)``, ``est`` descending (ties on item). ``est``
@@ -642,6 +659,7 @@ class FrequencyRollup(SketchRetention):
             .limit(k)
         )
 
+    @_reads_storage
     def topk_rows(self, start, end, k: int = 10) -> list[tuple]:
         """Driver-resident sibling of :meth:`approx_topk`: the same
         ``(item, est, upper)`` top-``k`` rows as plain Python tuples,
@@ -666,6 +684,7 @@ class FrequencyRollup(SketchRetention):
         )
         return [(it, est, est + terr) for it, est in ordered[:k]]
 
+    @_reads_storage
     def topk_rows_by(self, granularity, k: int = 10, start=None, end=None) -> list[tuple]:
         """Driver-resident sibling of :meth:`approx_topk_by`: the same
         ``(bucket, item, est, upper)`` per-period top-``k`` rows as plain
@@ -731,6 +750,7 @@ class FrequencyRollup(SketchRetention):
             out += [(dt, it, est, est + terr) for it, est in top]
         return out
 
+    @_reads_storage
     def topk_rows_by_key(self, k: int = 10, start=None, end=None) -> list[tuple]:
         """Driver-resident sibling of :meth:`approx_topk_by_key`: the same
         ``(<key>, item, est, upper)`` per-key top-``k`` rows as plain
@@ -744,10 +764,7 @@ class FrequencyRollup(SketchRetention):
         import numpy as np
 
         self._require_fresh()
-        if self.key_column is None:
-            raise ValueError(
-                "rollup was built without partition_by — no key column"
-            )
+        self._require_key()
         if (start is None) != (end is None):
             raise ValueError("give both bounds or neither")
         _check_k(k)
@@ -782,6 +799,7 @@ class FrequencyRollup(SketchRetention):
             out += [(key, it, est, est + terr) for it, est in top]
         return out
 
+    @_reads_storage
     def approx_topk_by(
         self, granularity, k: int = 10, start=None, end=None
     ) -> DataFrame:
@@ -882,6 +900,7 @@ class FrequencyRollup(SketchRetention):
             .orderBy(out_name, F.col("est").desc(), F.col("item").asc())
         )
 
+    @_reads_storage
     def approx_topk_by_key(self, k: int = 10, start=None, end=None) -> DataFrame:
         """Per-key top-``k`` over an optional aligned ``[start, end)``
         restriction — the dimensional form ("top domains per language";
@@ -891,10 +910,7 @@ class FrequencyRollup(SketchRetention):
         KEY's summed truncation error over the range, so every per-key
         true count lies in ``[est, upper]``. One tiny job."""
         self._require_fresh()
-        if self.key_column is None:
-            raise ValueError(
-                "rollup was built without partition_by — no key column"
-            )
+        self._require_key()
         c = self._caches  # ONE capture: frames and tiers
         kept, err = c.kept_df, c.err_df
         if (start is None) != (end is None):
@@ -905,6 +921,7 @@ class FrequencyRollup(SketchRetention):
             kept, err = self._restrict(kept, a, b), self._restrict(err, a, b)
         return self._grouped_topk(kept, err, F.col("__key"), self.key_column, k)
 
+    @_reads_storage
     def approx_count(self, item, start, end) -> tuple[int, int]:
         """``(est, upper)`` bounds for ONE item's count over the range —
         the point-query form (est = Σ kept counts, a lower bound that is
@@ -982,27 +999,23 @@ class FrequencyRollup(SketchRetention):
         return est, est + self._total_err(a, b, c.err_cache())
 
     # ------------------------------------------------------------ updates
-    def _merge_batch_locked(self, batch_df, time_column, StorageLevel) -> None:
+    def _merge_batch_locked(self, batch_df, time_column) -> None:
         """Fold a micro-batch in: batch counts sum into the kept rows
         (tier-aware bucketing for late rows landing in a compacted span),
         buckets re-truncate to capacity, and ``err`` grows by each
         touched bucket's (capacity+1)-th merged count. Dropped-now items
         carried a merged lower bound ≤ that rank value, and previously
         absent items were already covered by the old ``err`` — so
-        ``[est, upper]`` stays valid with errors adding across merges."""
-        sec = self._bucket_expr(time_sec_col(batch_df, time_column))
+        ``[est, upper]`` stays valid with errors adding across merges. A
+        stream can GROW the key domain past the build-time cap, so the
+        cap is re-checked before publishing."""
         grp = self._grp()
-        gcols = [sec.alias("__sec")]
-        if self.key_column is not None:
-            if self.key_column not in batch_df.columns:
-                raise ValueError(
-                    f"batch lacks partition column {self.key_column!r} — a "
-                    "keyed rollup cannot be maintained without it"
-                )
-            gcols.append(F.col(self.key_column).alias("__key"))
         batch = (
             batch_df.filter(F.col(time_column).isNotNull())
-            .groupBy(*gcols, F.col(self.column).alias("__item"))
+            .groupBy(
+                *self._bucket_keys(batch_df, time_column, batch=True),
+                F.col(self.column).alias("__item"),
+            )
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
         merged = (
@@ -1013,31 +1026,26 @@ class FrequencyRollup(SketchRetention):
         kept, add_err = _truncate(
             merged, self.capacity, keyed=self.key_column is not None
         )
-        new_err = _sum_err_frames(self._err, add_err, grp)
-        new_kept = kept.coalesce(_CACHE_PARTITIONS).persist(
-            StorageLevel.MEMORY_AND_DISK
+        self._publish(
+            kept, _sum_err_frames(self._err, add_err, grp), self.max_keys
         )
-        new_errp = new_err.coalesce(_CACHE_PARTITIONS).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        new_kept.count()
-        new_errp.count()
-        try:
-            # a stream can GROW the key domain past the build-time cap —
-            # re-check before publishing; on refusal the rollup keeps its
-            # pre-batch state (still fresh, still correct)
-            _check_key_cardinality(new_kept, self.key_column, self.max_keys)
-        except ValueError:
-            new_kept.unpersist()
-            new_errp.unpersist()
-            raise
-        old_df, old_err = self._df, self._err
-        self._df, self._err = new_kept, new_errp
-        old_df.unpersist()
-        old_err.unpersist()
-        self._refresh_caches()
 
-    def _compact_before_locked(self, cutoff_sec: int, width: int, StorageLevel) -> int:
+    def _publish(self, kept, err, max_keys=None, tiers=None) -> int:
+        """Swap in a new (kept, err) pair through :func:`_materialize_pair`,
+        re-capture the mirrors and retire the replaced pair (released once
+        no read holds it, so an ask holding an older capture can still
+        collect its mirrors — see :meth:`_retire`). Returns the new kept
+        row count."""
+        kept, err, rows = _materialize_pair(kept, err, self.key_column, max_keys)
+        old = (self._df, self._err)
+        self._df, self._err = kept, err
+        if tiers is not None:
+            self._tiers = tiers
+        self._refresh_caches()
+        self._retire(old, _readers(old[0]))
+        return rows
+
+    def _compact_before_locked(self, cutoff_sec: int, width: int) -> int:
         """Tiered retention (see :class:`SketchRetention`): fine buckets
         older than the cutoff regroup under ``width``; counts sum, the
         coarse bucket re-truncates to capacity, and the coarse ``err``
@@ -1047,10 +1055,10 @@ class FrequencyRollup(SketchRetention):
         cutoff = cutoff_sec - (cutoff_sec % width)
         if width == self.bucket_seconds and not self.tiers:
             return 0
-        in_span = F.col("__sec") < cutoff
-        before = self._df.filter(in_span).count()
+        before, total = self._span_rows(cutoff)
         if before == 0:
             return 0
+        in_span = F.col("__sec") < cutoff
         grp = self._grp()
         coarse_sec = (F.col("__sec") - (F.col("__sec") % width)).alias("__sec")
         key_cols = [F.col("__key")] if self.key_column is not None else []
@@ -1068,28 +1076,15 @@ class FrequencyRollup(SketchRetention):
             .agg(F.sum("err").alias("err"))
         )
         coarse_err = _sum_err_frames(fine_err, trunc_err, grp)
-        new_df = kept.unionByName(self._df.filter(~in_span)).coalesce(
-            _CACHE_PARTITIONS
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        new_err = coarse_err.unionByName(self._err.filter(~in_span)).coalesce(
-            _CACHE_PARTITIONS
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        after = new_df.filter(in_span).count()
-        new_err.count()
-        old_df, old_err = self._df, self._err
-        self._df, self._err = new_df, new_err
-        old_df.unpersist()
-        old_err.unpersist()
-        self._tiers = [(cutoff, width)]
-        self._refresh_caches()
-        return before - after
-
-    def _union_agg_exprs(self):  # pragma: no cover - SketchRetention hook
-        # unused: compact_before is overridden (truncation isn't a plain
-        # union aggregate), but the mixin contract names the hook
-        return [F.sum("cnt").alias("cnt")]
+        # compaction cannot grow the key domain: no cap re-check
+        return total - self._publish(
+            kept.unionByName(self._df.filter(~in_span)),
+            coarse_err.unionByName(self._err.filter(~in_span)),
+            tiers=[(cutoff, width)],
+        )
 
     # -------------------------------------------------------- persistence
+    @_reads_storage
     def save(self, path: str) -> str:
         os.makedirs(path, exist_ok=True)
         self._df.write.mode("overwrite").parquet(os.path.join(path, "kept"))
@@ -1109,7 +1104,7 @@ class FrequencyRollup(SketchRetention):
         return path
 
     def unpersist(self) -> None:
-        self._df.unpersist()
+        super().unpersist()
         self._err.unpersist()
 
 
@@ -1135,8 +1130,6 @@ def build_frequency_rollup(
     (checked here at build, and again on every ``merge_batch`` — a stream
     can grow the domain): past the cap the build raises instead of the
     driver OOMing at the first direct ask (r10, the r9 verdict's #5)."""
-    from pyspark import StorageLevel
-
     if capacity <= 0:
         raise ValueError(f"capacity must be positive, got {capacity}")
     if partition_by in ("item", "est", "upper"):
@@ -1160,17 +1153,11 @@ def build_frequency_rollup(
         .groupBy(*gcols, F.col(column).alias("__item"))
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    kept, err = _truncate(counts, capacity, keyed=partition_by is not None)
-    kept = kept.coalesce(_CACHE_PARTITIONS).persist(StorageLevel.MEMORY_AND_DISK)
-    err = err.coalesce(_CACHE_PARTITIONS).persist(StorageLevel.MEMORY_AND_DISK)
-    kept.count()
-    err.count()
-    try:
-        _check_key_cardinality(kept, partition_by, max_keys)
-    except ValueError:
-        kept.unpersist()
-        err.unpersist()
-        raise
+    kept, err, _ = _materialize_pair(
+        *_truncate(counts, capacity, keyed=partition_by is not None),
+        partition_by,
+        max_keys,
+    )
     r = FrequencyRollup(
         kept, err, column, bucket_seconds, capacity, key_column=partition_by,
         max_keys=max_keys,
@@ -1184,19 +1171,13 @@ def build_frequency_rollup(
 
 
 def load_frequency_rollup(spark, path: str) -> FrequencyRollup:
-    from pyspark import StorageLevel
-
     with open(os.path.join(path, _META)) as f:
         meta = json.load(f)
-    kept = (
-        spark.read.parquet(os.path.join(path, "kept"))
-        .coalesce(_CACHE_PARTITIONS)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    err = (
-        spark.read.parquet(os.path.join(path, "err"))
-        .coalesce(_CACHE_PARTITIONS)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    kept, err, _ = _materialize_pair(
+        spark.read.parquet(os.path.join(path, "kept")),
+        spark.read.parquet(os.path.join(path, "err")),
+        meta.get("key_column"),
+        None,  # the cap is re-derived below
     )
     if "max_keys" in meta:
         # r10+ saves state the cap (possibly an explicit None opt-out)

@@ -2,133 +2,14 @@
 
 The three sketch rollup families (HLL distinct counts — :mod:`.distinct`,
 KLL quantiles — :mod:`.quantiles`, theta set algebra — :mod:`.theta`)
-aggregate over the IDENTICAL group-by key: the bucket second, plus the
-optional partition key. Built one family at a time, each pays its own full
-table scan for a byte-identical pass shape — at 100 TB the scan IS the
-build cost, repeated N times. This module applies the engine's existing
-multi-column one-pass discipline (``WheelEngine.build_indexes``,
-:func:`.distinct.build_distinct_rollups`,
-:func:`.quantiles.build_quantile_rollups`) ACROSS families: ONE declarative
-aggregation computes every requested sketch column in a single scan, and
-each returned handle is a per-column view over a shared refcounted cache
-(``SketchRetention._detach_shared`` releases it when the last sibling
-unpersists or mutates away).
-
-Answer parity with standalone builds: HLL state is per-register maxima and
-theta state is a smallest-hashes set — both order-independent, so their
-sketches (and every estimate) are identical however the build batches
-rows. KLL compaction is randomized, so quantile answers carry the same
-rank-error bound as ANY rebuild (the documented KLL contract — repeated
-builds may return adjacent data values within the bound).
+aggregate over the IDENTICAL group-by key, so ONE scan can build them all.
+:func:`build_sketch_rollups` lives beside the lifecycle it drives, in
+:mod:`.sketch_retention`, as the one function every sketch build goes
+through; this module keeps its original import path.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from .distinct import DistinctRollup
-from .quantiles import QuantileRollup, _fns, _suffix_for
-from .rollups import time_sec_col
-from .theta import ThetaRollup
+from .sketch_retention import build_sketch_rollups
 
 __all__ = ["build_sketch_rollups"]
-
-#: same probes-at-task-launch-floor trade as the per-family builders
-_CACHE_PARTITIONS = 4
-
-
-def build_sketch_rollups(
-    df: DataFrame,
-    time_column: str,
-    distinct: tuple[str, ...] | list[str] = (),
-    quantile: tuple[str, ...] | list[str] = (),
-    theta: tuple[str, ...] | list[str] = (),
-    bucket_seconds: int = 3600,
-    lg_k: int = 12,
-    k: int = 200,
-    partition_by: str | None = None,
-) -> dict[str, dict]:
-    """Every requested family's rollup from ONE scan of ``df``.
-
-    Returns ``{"distinct": {col: DistinctRollup}, "quantile":
-    {col: QuantileRollup}, "theta": {col: ThetaRollup}}`` — each handle
-    behaves exactly like its standalone-build counterpart (same bucketing,
-    same sketch parameters, mirror warmed for zero-job direct asks);
-    ``unpersist`` on a handle drops its claim on the shared cache, which is
-    released when the last sibling detaches. ``lg_k`` sizes the HLL and
-    theta sketches, ``k`` the KLL sketches, as in the per-family builders.
-    """
-    from pyspark import StorageLevel
-
-    distinct, quantile, theta = tuple(distinct), tuple(quantile), tuple(theta)
-    if not (distinct or quantile or theta):
-        raise ValueError("at least one family's columns must be non-empty")
-    for fam_name, cols in (
-        ("distinct", distinct), ("quantile", quantile), ("theta", theta)
-    ):
-        if len({c.lower() for c in cols}) != len(cols):
-            # fail here, not as a refcount leak: the handles dict is keyed
-            # by column, so a duplicate would orphan one claim on the
-            # shared cache and the parquet cache could never be released
-            raise ValueError(f"duplicate columns in {fam_name}={cols!r}")
-    sec = time_sec_col(df, time_column)
-    if bucket_seconds != 1:
-        sec = sec - (sec % bucket_seconds)
-    keys = [sec.alias("__sec")]
-    if partition_by is not None:
-        keys.append(F.col(partition_by).alias("__key"))
-    aggs = []
-    for i, c in enumerate(distinct):
-        aggs.append(F.hll_sketch_agg(F.col(c), F.lit(lg_k)).alias(f"__hll{i}"))
-    suffixes = {c: _suffix_for(df, c) for c in quantile}
-    for i, c in enumerate(quantile):
-        sketch = _fns(suffixes[c])[0]
-        cast = "bigint" if suffixes[c] == "bigint" else "double"
-        aggs.append(sketch(F.col(c).cast(cast), F.lit(k)).alias(f"__kll{i}"))
-    for i, c in enumerate(theta):
-        # same shim-registered aggregate (and the same bare-identifier
-        # contract on the column name) as build_theta_rollup
-        aggs.append(
-            F.expr(f"theta_sketch_agg({c}, {lg_k})").alias(f"__theta{i}")
-        )
-    combined = (
-        df.filter(F.col(time_column).isNotNull())
-        .groupBy(*keys)
-        .agg(*aggs)
-        .coalesce(_CACHE_PARTITIONS)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n_rows = combined.count()  # ONE materializing scan for every family
-    holder = {
-        "df": combined,
-        "refs": len(distinct) + len(quantile) + len(theta),
-    }
-    base_cols = ["__sec"] + (["__key"] if partition_by is not None else [])
-    out: dict[str, dict] = {"distinct": {}, "quantile": {}, "theta": {}}
-    for i, c in enumerate(distinct):
-        view = combined.select(*base_cols, F.col(f"__hll{i}").alias("__hll"))
-        h = DistinctRollup(
-            view, c, bucket_seconds, lg_k, key_column=partition_by
-        )
-        h._shared = holder
-        h._warm_mirror("__hll")  # zero-job direct asks from the start
-        out["distinct"][c] = h
-    for i, c in enumerate(quantile):
-        view = combined.select(*base_cols, F.col(f"__kll{i}").alias("__kll"))
-        h = QuantileRollup(
-            view, c, bucket_seconds, k, suffixes[c], key_column=partition_by
-        )
-        h._shared = holder
-        h._warm_mirror("__kll")
-        out["quantile"][c] = h
-    for i, c in enumerate(theta):
-        view = combined.select(
-            *base_cols, F.col(f"__theta{i}").alias("__theta")
-        )
-        h = ThetaRollup(view, c, bucket_seconds, lg_k, key_column=partition_by)
-        h._rollup_rows = n_rows  # retention_by's bounded-lag proof (r15)
-        h._shared = holder
-        h._warm_mirror("__theta")
-        out["theta"][c] = h
-    return out

@@ -33,22 +33,14 @@ from __future__ import annotations
 
 import math
 
-import json
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .rollups import time_sec_col
-from .sketch_retention import SketchRetention
+from .sketch_retention import SketchRetention, _reads_storage, build_sketch_rollups
 
 __all__ = ["QuantileRollup", "build_quantile_rollup", "load_quantile_rollup"]
 
-_META = "_quantile_meta.json"
 _INTEGRAL = {"tinyint", "smallint", "int", "bigint"}
-#: Cached-rollup partition count — small enough that probes run at the
-#: task-launch floor, large enough to parallelize a multi-year rollup.
-_CACHE_PARTITIONS = 4
 
 
 def _suffix_for(df: DataFrame, column: str) -> str:
@@ -72,6 +64,10 @@ class QuantileRollup(SketchRetention):
     ``approx_quantile(q, a, b)`` answers ``PERCENTILE(col, q)`` over
     ``[a, b)`` (second-aligned bounds, like every wheel lookup) by merging
     the bucket sketches — one tiny Spark job over the cached rollup."""
+
+    _STATE = "__kll"
+    _META = "_quantile_meta.json"
+    _PARAMS = ("k", "suffix")
 
     def __init__(
         self,
@@ -102,33 +98,9 @@ class QuantileRollup(SketchRetention):
             else ops.kllMergeDoublesGrouped
         )
 
-    def _range_filter(self, start, end):
-        """Bucket filter covering ``[start, end)``: a bucket ``[s, s+w)``
-        intersects the range iff ``s > a - w`` and ``s < b`` — partial edge
-        buckets on BOTH sides are included whole (superset semantics; align
-        bounds to ``bucket_seconds`` for exact range semantics — the wheel
-        discipline)."""
-        a = F.unix_timestamp(F.lit(start).cast("timestamp"))
-        b = F.unix_timestamp(F.lit(end).cast("timestamp"))
-        # per-row width: compacted (coarser) buckets widen the slop so a
-        # coarse bucket spanning the range start is still included whole
-        return (F.col("__sec") > a - self._width_expr()) & (
-            F.col("__sec") < b
-        )
-
     #: sentinel for "no key restriction" — the base gate's _NO_ASK (see
     #: DistinctRollup._NO_KEY)
     _NO_KEY = SketchRetention._NO_ASK
-
-    def _restrict(self, start, end, key):
-        df = self._df.filter(self._range_filter(start, end))
-        if key is not QuantileRollup._NO_KEY:
-            if self.key_column is None:
-                raise ValueError(
-                    "rollup was built without partition_by — no key column"
-                )
-            df = df.filter(F.col("__key").eqNullSafe(F.lit(key)))
-        return df
 
     # _jdouble_array comes from SketchRetention (shared with the grouped
     # direct asks since r11)
@@ -257,6 +229,7 @@ class QuantileRollup(SketchRetention):
             compute,
         )
 
+    @_reads_storage
     def approx_quantile_by_key(self, q, start=None, end=None) -> DataFrame:
         """Per-key quantile estimates over an optional ``[start, end)``
         restriction — the dimensional form (latency percentile per
@@ -265,24 +238,17 @@ class QuantileRollup(SketchRetention):
         ordered by key (NULL keys included as their own row); one tiny job
         over the cached sketch table."""
         self._require_fresh()
-        if self.key_column is None:
-            raise ValueError(
-                "rollup was built without partition_by — no key column"
-            )
+        self._require_key()
         qs = list(q) if isinstance(q, (list, tuple)) else [q]
         _, merge, get_q, _, get_n = _fns(self.suffix)
-        df = self._df
-        if start is not None or end is not None:
-            df = df.filter(
-                self._range_filter(start or "1970-01-01", end or "9999-01-01")
-            )
         names = (
             ["approx_quantile"]
             if not isinstance(q, (list, tuple))
             else [f"approx_quantile_{i}" for i in range(len(qs))]
         )
         return (
-            df.groupBy(F.col("__key").alias(self.key_column))
+            self._restrict_open(start, end)
+            .groupBy(F.col("__key").alias(self.key_column))
             .agg(merge("__kll", F.lit(self.k)).alias("__sk"))
             .select(
                 self.key_column,
@@ -296,6 +262,7 @@ class QuantileRollup(SketchRetention):
             .orderBy(self.key_column)
         )
 
+    @_reads_storage
     def approx_quantile_by(
         self, granularity, q, start=None, end=None
     ) -> DataFrame:
@@ -311,26 +278,15 @@ class QuantileRollup(SketchRetention):
         self._require_fresh()
         qs = list(q) if isinstance(q, (list, tuple)) else [q]
         _, merge, get_q, _, get_n = _fns(self.suffix)
-        ts = F.timestamp_seconds(F.col("__sec"))
-        self._check_granularity(granularity, start)
-        if isinstance(granularity, int):
-            bucket = F.timestamp_seconds(
-                F.col("__sec") - F.col("__sec") % F.lit(granularity)
-            )
-        else:
-            bucket = F.date_trunc(str(granularity), ts)
-        df = self._df
-        if start is not None or end is not None:
-            df = df.filter(
-                self._range_filter(start or "1970-01-01", end or "9999-01-01")
-            )
+        bucket = self._period_col(granularity, start)
         names = (
             ["approx_quantile"]
             if not isinstance(q, (list, tuple))
             else [f"approx_quantile_{i}" for i in range(len(qs))]
         )
         return (
-            df.groupBy(bucket.alias("bucket"))
+            self._restrict_open(start, end)
+            .groupBy(bucket.alias("bucket"))
             .agg(merge("__kll", F.lit(self.k)).alias("__sk"))
             .select(
                 "bucket",
@@ -359,10 +315,7 @@ class QuantileRollup(SketchRetention):
         merges carry KLL's randomized-compaction caveat either way.
         Memoized until the rollup mutates."""
         self._require_fresh()
-        if self.key_column is None:
-            raise ValueError(
-                "rollup was built without partition_by — no key column"
-            )
+        self._require_key()
         qs = list(q) if isinstance(q, (list, tuple)) else [q]
         for x in qs:
             if not 0.0 <= float(x) <= 1.0:
@@ -461,86 +414,14 @@ class QuantileRollup(SketchRetention):
             compute,
         )
 
+    def _sketch_agg(self):
+        sketch = _fns(self.suffix)[0]
+        return sketch(F.col(self.column).cast(self.suffix), F.lit(self.k))
+
     def _union_agg_exprs(self):
-        """Merge aggregation for :meth:`SketchRetention.compact_before` —
-        KLL merge is exact sketch algebra (same rank-error bound)."""
+        """KLL merge is exact sketch algebra (same rank-error bound)."""
         _, merge, _, _, _ = _fns(self.suffix)
         return [merge("__kll", F.lit(self.k)).alias("__kll")]
-
-    def _merge_batch_locked(self, batch_df, time_column, StorageLevel) -> None:
-        """Merge a micro-batch of raw rows into the rollup — streaming
-        maintenance. KLL sketches are mergeable monoids, so the merged
-        rollup answers as a fresh batch build over the union would (same
-        rank-error bound; the same model as the wheel and HLL maintainers):
-        the batch is sketched per bucket with the pinned ``k``, unioned with
-        the stored sketches, and re-merged by bucket. Late data simply lands
-        in its bucket. The new rollup is materialized before the old cache
-        is released."""
-
-        sketch, merge, _, _, _ = _fns(self.suffix)
-        sec = self._bucket_expr(time_sec_col(batch_df, time_column))
-        cast = "bigint" if self.suffix == "bigint" else "double"
-        keys = [sec.alias("__sec")]
-        if self.key_column is not None:
-            if self.key_column not in batch_df.columns:
-                raise ValueError(
-                    f"batch lacks partition column {self.key_column!r} — a "
-                    "keyed rollup cannot be maintained without it"
-                )
-            keys.append(F.col(self.key_column).alias("__key"))
-        delta = (
-            batch_df.filter(F.col(time_column).isNotNull())
-            .groupBy(*keys)
-            .agg(
-                sketch(F.col(self.column).cast(cast), F.lit(self.k)).alias("__kll")
-            )
-        )
-        group = ["__sec"] + (["__key"] if self.key_column is not None else [])
-        merged = (
-            self._df.unionByName(delta)
-            .groupBy(*group)
-            .agg(merge("__kll", F.lit(self.k)).alias("__kll"))
-            .coalesce(_CACHE_PARTITIONS)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        merged.count()
-        old = self._df
-        self._df = merged
-        # A handle from a one-pass multi-column build shared the parent
-        # cache; it now owns a private persisted frame, so drop the claim
-        # (the parent is released when the last sibling detaches). Handles
-        # with a private frame release exactly the frame being replaced.
-        if not self._detach_shared():
-            old.unpersist()
-        self.invalidate_asks()
-        self._drop_mirror()
-
-    def save(self, path: str) -> str:
-        """Persist the sketch table as parquet (one distributed write) plus
-        a JSON sidecar pinning column/bucket/k/type — without this a restart
-        silently loses the rollup and every estimate pays a rebuild scan.
-        Reload with :func:`load_quantile_rollup`."""
-        self._df.write.mode("overwrite").parquet(path)
-        with open(os.path.join(path, _META), "w") as f:
-            json.dump(
-                {
-                    "column": self.column,
-                    "bucket_seconds": self.bucket_seconds,
-                    "k": self.k,
-                    "suffix": self.suffix,
-                    "key_column": self.key_column,
-                    **self._persist_meta(),
-                },
-                f,
-            )
-        return path
-
-    def unpersist(self) -> None:
-        # release the storage that actually holds the sketches: the shared
-        # one-pass parent (refcounted across sibling handles) or this
-        # handle's private frame
-        if not self._detach_shared():
-            self._df.unpersist()
 
 
 def build_quantile_rollup(
@@ -564,34 +445,9 @@ def build_quantile_rollup(
     asks still work by merging across keys (sketches are monoids). State
     grows to buckets × distinct keys — meant for low-cardinality
     dimensional keys."""
-    from pyspark import StorageLevel
-
-    suffix = _suffix_for(df, column)
-    sketch, _, _, _, _ = _fns(suffix)
-    cast = "bigint" if suffix == "bigint" else "double"
-    sec = time_sec_col(df, time_column)
-    if bucket_seconds != 1:
-        sec = sec - (sec % bucket_seconds)
-    keys = [sec.alias("__sec")]
-    if partition_by is not None:
-        keys.append(F.col(partition_by).alias("__key"))
-    rollup = (
-        df.filter(F.col(time_column).isNotNull())
-        .groupBy(*keys)
-        .agg(sketch(F.col(column).cast(cast), F.lit(k)).alias("__kll"))
-        # The cached rollup is tiny (occupied buckets, not rows) but the
-        # group-by leaves it in shuffle-partition-count pieces, making every
-        # probe schedule ~33 tasks; a handful of partitions keeps probes at
-        # task-launch floor while still parallelizing huge rollups.
-        .coalesce(_CACHE_PARTITIONS)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    rollup.count()  # materialize once; probes never touch the raw table
-    r = QuantileRollup(
-        rollup, column, bucket_seconds, k, suffix, key_column=partition_by
-    )
-    r._warm_mirror("__kll")  # zero-job direct asks from the start (r10)
-    return r
+    return build_quantile_rollups(
+        df, time_column, [column], bucket_seconds, k, partition_by
+    )[column]
 
 
 def build_quantile_rollups(
@@ -608,70 +464,13 @@ def build_quantile_rollups(
     KLL sketch per column per bucket; each returned handle selects its own
     column from the shared cached frame, so probes stay per-column while
     the build cost is one scan instead of N."""
-    from pyspark import StorageLevel
-
-    if not columns:
-        raise ValueError("columns must be non-empty")
-    suffixes = {c: _suffix_for(df, c) for c in columns}
-    sec = time_sec_col(df, time_column)
-    if bucket_seconds != 1:
-        sec = sec - (sec % bucket_seconds)
-    keys = [sec.alias("__sec")]
-    if partition_by is not None:
-        keys.append(F.col(partition_by).alias("__key"))
-    aggs = []
-    for i, c in enumerate(columns):
-        sketch, _, _, _, _ = _fns(suffixes[c])
-        cast = "bigint" if suffixes[c] == "bigint" else "double"
-        aggs.append(sketch(F.col(c).cast(cast), F.lit(k)).alias(f"__kll{i}"))
-    combined = (
-        df.filter(F.col(time_column).isNotNull())
-        .groupBy(*keys)
-        .agg(*aggs)
-        .coalesce(_CACHE_PARTITIONS)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    combined.count()  # ONE materializing scan for all columns
-    out = {}
-    #: refcounted shared cache: released when the last sibling handle
-    #: unpersists or detaches via merge_batch
-    holder = {"df": combined, "refs": len(columns)}
-    base_cols = ["__sec"] + (["__key"] if partition_by is not None else [])
-    for i, c in enumerate(columns):
-        view = combined.select(
-            *base_cols, F.col(f"__kll{i}").alias("__kll")
-        )
-        out[c] = QuantileRollup(
-            view, c, bucket_seconds, k, suffixes[c], key_column=partition_by
-        )
-        out[c]._shared = holder
-    return out
+    return build_sketch_rollups(
+        df, time_column, quantile=columns, bucket_seconds=bucket_seconds,
+        k=k, partition_by=partition_by,
+    )["quantile"]
 
 
-def load_quantile_rollup(spark, path: str) -> QuantileRollup:
-    """Inverse of :meth:`QuantileRollup.save`: read the parquet sketch
-    table back into executor cache. The sketch bytes are the state, not a
-    derived view — reloaded estimates carry the identical rank-error bound
-    (query-time merges are randomized KLL compaction, so repeated asks may
-    return adjacent data values within that bound)."""
-    from pyspark import StorageLevel
-
-    with open(os.path.join(path, _META)) as f:
-        meta = json.load(f)
-    df = (
-        spark.read.parquet(path)
-        .coalesce(_CACHE_PARTITIONS)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    df.count()
-    r = QuantileRollup(
-        df,
-        meta["column"],
-        meta["bucket_seconds"],
-        meta["k"],
-        meta["suffix"],
-        key_column=meta.get("key_column"),
-    )
-    r._restore_meta(meta)
-    r._warm_mirror("__kll")  # no-op on stale loads / shim-less sessions
-    return r
+#: Inverse of :meth:`QuantileRollup.save`; reloaded estimates carry the
+#: identical rank-error bound (query-time merges are randomized KLL
+#: compaction, so repeated asks may return adjacent data values).
+load_quantile_rollup = QuantileRollup.load

@@ -1,10 +1,18 @@
-"""Tiered HAW retention for the sketch rollups (HLL / KLL / theta).
+"""The sketch rollups' one lifecycle (HLL / KLL / theta; frequency shares
+the materialization), tiered HAW retention and driver-direct asks.
 
-The wheels gained a retention ladder (``lookup.py`` ``compact_before``,
-``rollup_table.py`` for the Spark backend) so no index grows linearly with
-timeline span under streaming maintenance — but the sketch rollup tables
-(one sketch frame row per bucket, persisted sidecars included) kept
-growing O(span / bucket_seconds) forever. Sketches are **union monoids**
+Lifecycle: each union-sketch family is a small spec (state column, sketch
+and union aggregates, JVM grouped merge, saved parameters — see
+:class:`SketchRetention`); building, merging, compacting, saving and
+loading are written once here, and every new frame is published through
+:func:`_materialize`, which cuts the lineage so a stream's merge cost
+stays flat.
+
+Retention: the wheels gained a retention ladder (``lookup.py``
+``compact_before``, ``rollup_table.py`` for the Spark backend) so no index
+grows linearly with timeline span under streaming maintenance — but the
+sketch rollup tables (one sketch frame row per bucket, persisted sidecars
+included) kept growing O(span / bucket_seconds) forever. Sketches are **union monoids**
 (HLL union, KLL merge, theta union are all exact sketch algebra), so the
 wheels' ladder applies verbatim: regroup fine buckets older than a cutoff
 under a coarser width with one re-aggregation job over the cached rollup,
@@ -34,12 +42,90 @@ Gates honored after compaction:
 
 from __future__ import annotations
 
+import json
+import os
 import re
+import weakref
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["SketchRetention"]
+from .rollups import time_sec_col
+
+__all__ = ["SketchRetention", "build_sketch_rollups"]
+
+#: Partition count of every cached rollup frame: small enough that probes
+#: run at the task-launch floor (the shuffle-partition default made every
+#: estimate schedule ~33 tasks), large enough to parallelize a multi-year
+#: rollup.
+_CACHE_PARTITIONS = 4
+
+
+def _materialize(df: DataFrame) -> tuple[DataFrame, int]:
+    """Materialize ``df`` as a cached, lineage-free frame: ``(frame,
+    rows)``. Every sketch-rollup build, load, merge and compaction goes
+    through here.
+
+    Mechanism: coalesce to :data:`_CACHE_PARTITIONS`, mark a lazy local
+    checkpoint, persist ``MEMORY_AND_DISK`` and ``count()``. The count is
+    the one job that fills the SQL cache; filling it computes the
+    checkpointed RDD, and the end of that job truncates the RDD's lineage.
+    The frame's plan is then one ``LogicalRDD`` leaf.
+
+    Why: a merge is ``old.unionByName(delta).groupBy(...)``. Over a plain
+    persisted frame that plan chains every earlier merge, and planning
+    time and driver heap grew with each one (an HLL merge of sf0.1 events
+    in 3-hour batches, 4 cores, 3 GB driver heap: 0.7 s at merge 2, 28 s
+    at merge 15, out of heap at merge 16). Over the cut frame a merge
+    plans a constant-size tree.
+
+    Release: ``DataFrame.unpersist`` never frees a local checkpoint's
+    blocks, and keeping them would store the rows twice, so they are freed
+    right after the count; the SQL cache holds the only copy. The trade:
+    a frame whose cache is gone cannot recompute, so a replaced frame
+    stays cached while reads of it run (:meth:`SketchRetention._retire`),
+    and a dropped cache marks the rollup stale
+    (:meth:`SketchRetention._read_storage`). Jobs: the same as
+    ``persist()`` + ``count()``; the checkpoint adds none."""
+    from pyspark import StorageLevel
+
+    out = df.coalesce(_CACHE_PARTITIONS).localCheckpoint(eager=False)
+    out.persist(StorageLevel.MEMORY_AND_DISK)
+    rows = out.count()
+    out._jdf.queryExecution().logical().rdd().unpersist(False)
+    return out, rows
+
+
+#: the error Spark raises when a read needs a dropped local-checkpoint block
+_LOST_BLOCK = "CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"
+
+
+class _Read:
+    """Marks one in-flight read in a frame's reader set."""
+
+    __slots__ = ("__weakref__",)
+
+
+def _readers(frame) -> weakref.WeakSet:
+    """The live readers of a published storage frame: in-flight asks and
+    the DataFrames asks returned (:meth:`SketchRetention._read_storage`)."""
+    readers = frame.__dict__.get("_uw_readers")
+    if readers is None:
+        readers = frame.__dict__.setdefault("_uw_readers", weakref.WeakSet())
+    return readers
+
+
+def _reads_storage(ask):
+    """Method decorator: run the ask through
+    :meth:`SketchRetention._read_storage`."""
+    import functools
+
+    @functools.wraps(ask)
+    def run(self, *args, **kwargs):
+        return self._read_storage(lambda: ask(self, *args, **kwargs))
+
+    return run
+
 
 #: Fixed date_trunc levels in seconds; calendar levels (week and up) have
 #: day-aligned boundaries, so day-nesting widths tile them.
@@ -50,16 +136,35 @@ _MEMO_MISS = object()
 
 
 class SketchRetention:
-    """Mixin adding ``compact_before`` / ``check_compact`` tiered retention
-    to a per-bucket sketch rollup.
+    """One lifecycle for the per-bucket sketch rollups: build, merge,
+    compact, save and load, plus the tiered retention ladder and the
+    driver-direct asks.
 
-    Host-class contract: ``self._df`` (cached rollup with ``__sec`` and,
-    when keyed, ``__key``), ``self.bucket_seconds``, ``self.key_column``,
-    and ``_union_agg_exprs()`` returning the merge aggregation(s) that
-    re-bucket the sketch column(s). ``_detach_shared`` is honored when the
-    host has one (one-pass multi-column builds)."""
+    A union-sketch family (HLL :mod:`.distinct`, KLL :mod:`.quantiles`,
+    :mod:`.theta`) is a small spec on its class, the wheel's lift /
+    combine / lower triple (``UWheelAggregate``, reference
+    ``index/mod.rs:7-21``):
 
-    _SKETCH_CACHE_PARTITIONS = 4
+    * ``_STATE``: its state column (``__hll`` / ``__kll`` / ``__theta``);
+    * ``_sketch_agg()``: the per-bucket sketch aggregate over raw
+      ``column`` values;
+    * ``_union_agg_exprs()``: the union aggregate re-merging stored
+      ``_STATE`` sketches;
+    * ``_jvm_merge_grouped(ops)``: its JVM grouped merge (day tier);
+    * ``_META`` / ``_PARAMS``: its saved-meta file name and the sketch
+      parameters saved beside the common fields, in constructor order
+      (``lg_k``, or ``k`` + ``suffix``).
+
+    Everything else lives here once: the build
+    (:func:`build_sketch_rollups`), :meth:`merge_batch`,
+    :meth:`compact_before`, :meth:`save`, :meth:`load`,
+    :meth:`unpersist` and the range selection. Every new frame goes
+    through :func:`_materialize`. A handle carries ``_df`` (the cached
+    rollup: ``__sec``, ``__key`` when keyed, the state column),
+    ``column``, ``bucket_seconds`` and ``key_column``; sibling handles of
+    a one-pass build share a refcounted ``_shared`` parent. The frequency
+    family keeps its own truncation lifecycle and shares the helper, the
+    ladder and the gates."""
 
     # ---------------------------------------------------------- freshness
     #: The stale-never-answers discipline, extended from the wheels and
@@ -131,7 +236,9 @@ class SketchRetention:
         old snapshot stay consistent), and every lookup/evict here
         tolerates a concurrent swap/evict (get-with-sentinel,
         pop-with-default) — a dashboard thread racing a streaming merge
-        can at worst recompute, never crash or see a half state."""
+        can at worst recompute, never crash or see a half state (the
+        frame it reads stays cached until it is done, see
+        :meth:`_retire`)."""
         memo = getattr(self, "_ask_memo", None)
         if memo is None:
             memo = self._ask_memo = {}
@@ -140,7 +247,7 @@ class SketchRetention:
             memo.pop(key, None)  # LRU touch (dicts iterate in order)
             memo[key] = val
             return val
-        val = compute()
+        val = self._read_storage(compute)
         memo[key] = val
         while len(memo) > self._ASK_MEMO_MAX:
             try:
@@ -155,22 +262,253 @@ class SketchRetention:
         under a stale mark never changed, only its completeness)."""
         self._ask_memo = {}
 
-    # --------------------------------------------- shared one-pass storage
-    def _detach_shared(self) -> bool:
-        """Drop this handle's claim on a one-pass shared parent frame
-        (multi-column and cross-family builds), releasing the parent cache
-        when the LAST sibling detaches. Returns whether the handle was
-        sharing (its own ``_df`` is an unpersisted view). Mutation paths
-        call this instead of ``unpersist`` on the frame being replaced —
-        the handle then owns a private persisted frame."""
+    # ------------------------------------------------------------ storage
+    def _read_storage(self, read):
+        """Run ``read``, an ask over the cached frame, as a reader of this
+        handle's storage: a merge keeps the storage cached until the read
+        returns and any DataFrame it returned is gone (:meth:`_retire`).
+        If Spark dropped the CURRENT frame's cache (``clearCache()``,
+        ``uncacheTable``, a lost block), which cannot recompute, mark the
+        rollup stale: asks refuse and the router delegates until a
+        rebuild or load."""
+        df = self._df
+        readers = _readers(self._storage())
+        token = _Read()
+        readers.add(token)
+        try:
+            out = read()
+            if isinstance(out, DataFrame):
+                readers.add(out)  # the caller collects it later
+            return out
+        except Exception as e:
+            if _LOST_BLOCK not in str(e) or self._df is not df:
+                raise
+            self.mark_stale(
+                "its cached frame was dropped (spark.catalog.clearCache(), "
+                "uncacheTable or a lost block) and cannot recompute; "
+                "rebuild or load it"
+            )
+            self._require_fresh()
+        finally:
+            readers.discard(token)
+            self._sweep_retired()
+
+    def _storage(self) -> DataFrame:
+        """The cached frame under ``_df``: itself, or a shared parent."""
         shared = getattr(self, "_shared", None)
+        return self._df if shared is None else shared["df"]
+
+    def _drop_claim(self):
+        """Give up this handle's claim on its storage; return the frame
+        left unclaimed (its private frame, or a one-pass shared parent
+        whose LAST claim this was), else None."""
+        shared, self._shared = getattr(self, "_shared", None), None
         if shared is None:
-            return False
-        self._shared = None
+            return self._df
         shared["refs"] -= 1
-        if shared["refs"] == 0:
-            shared["df"].unpersist()
-        return True
+        return shared["df"] if shared["refs"] == 0 else None
+
+    def _retire(self, frames, readers) -> None:
+        """Release ``frames``, the storage a publish replaced, once its
+        ``readers`` are gone: a released frame cannot recompute, so a read
+        that started on it (a job-path ask, a frequency capture's mirror
+        collect, a returned DataFrame) finishes first. The end of the last
+        read, or a later publish, sweeps it. No Spark job."""
+        frames = [f for f in frames if f is not None]
+        with self._lazy_lock("_retire_lock_obj"):
+            self._retired = [*getattr(self, "_retired", ()), (frames, readers)]
+        self._sweep_retired()
+
+    def _sweep_retired(self, force: bool = False) -> None:
+        """Release the retired frames no read holds any more (``force``:
+        all of them)."""
+        if not getattr(self, "_retired", None):
+            return
+        done, kept = [], []
+        with self._lazy_lock("_retire_lock_obj"):
+            for frames, readers in self._retired:
+                (done if force or not readers else kept).append((frames, readers))
+            self._retired = kept
+        for frames, _ in done:
+            for f in frames:
+                f.unpersist()
+
+    # ------------------------------------------------------------ lifecycle
+    #: "no key restriction" sentinel — None is a real (NULL-partition)
+    #: ask value, so absence needs its own object
+    _NO_ASK = object()
+
+    def _grp(self) -> list[str]:
+        return ["__sec"] + (["__key"] if self.key_column is not None else [])
+
+    def _bucket_keys(self, df: DataFrame, time_column: str, batch=False):
+        """Group-by keys for raw rows: the tier-aware bucket second (late
+        rows landing in a compacted span bucket at the tier width) plus
+        the partition key. A ``batch`` must carry the partition column —
+        a keyed rollup cannot be maintained without it."""
+        if batch and self.key_column is not None and self.key_column not in df.columns:
+            raise ValueError(
+                f"batch lacks partition column {self.key_column!r} — a "
+                "keyed rollup cannot be maintained without it"
+            )
+        keys = [self._bucket_expr(time_sec_col(df, time_column)).alias("__sec")]
+        if self.key_column is not None:
+            keys.append(F.col(self.key_column).alias("__key"))
+        return keys
+
+    def _require_key(self) -> None:
+        if self.key_column is None:
+            raise ValueError(
+                "rollup was built without partition_by — no key column"
+            )
+
+    def _range_filter(self, start, end) -> Column:
+        """Bucket filter covering ``[start, end)``: a bucket ``[s, s+w)``
+        intersects the range iff ``s > a - w`` and ``s < b`` — so partial
+        edge buckets on BOTH sides are included whole (superset semantics;
+        estimates never undercount against unaligned bounds). The width is
+        per row: a compacted (coarser) bucket spanning the range start is
+        still included whole."""
+        a = F.unix_timestamp(F.lit(start).cast("timestamp"))
+        b = F.unix_timestamp(F.lit(end).cast("timestamp"))
+        return (F.col("__sec") > a - self._width_expr()) & (F.col("__sec") < b)
+
+    def _restrict(self, start, end, key=_NO_ASK) -> DataFrame:
+        """The job path's selection: buckets intersecting ``[start, end)``,
+        optionally one key partition (NULL-safe ``key=None``)."""
+        df = self._df.filter(self._range_filter(start, end))
+        if key is not SketchRetention._NO_ASK:
+            self._require_key()
+            df = df.filter(F.col("__key").eqNullSafe(F.lit(key)))
+        return df
+
+    def _restrict_open(self, start=None, end=None) -> DataFrame:
+        """The series forms' optional restriction: no bounds select every
+        bucket, and an open side stands in as '1970-01-01' / '9999-01-01'
+        (the literals `_OPEN_START_SEC` / `_OPEN_END_SEC` resolve)."""
+        if start is None and end is None:
+            return self._df
+        return self._df.filter(
+            self._range_filter(start or "1970-01-01", end or "9999-01-01")
+        )
+
+    def _period_col(self, granularity, start=None) -> Column:
+        """The series forms' cell: ``date_trunc`` for a named granularity,
+        epoch-aligned tumbling windows for an int width in seconds —
+        validated against the ladder first (`_check_granularity`)."""
+        self._check_granularity(granularity, start)
+        if isinstance(granularity, int):
+            return F.timestamp_seconds(
+                F.col("__sec") - F.col("__sec") % F.lit(granularity)
+            )
+        return F.date_trunc(str(granularity), F.timestamp_seconds(F.col("__sec")))
+
+    def _replace(self, frame: DataFrame, tiers=None) -> int:
+        """Publish ``frame`` through :func:`_materialize` as this handle's
+        rollup (with new ``tiers`` when a compaction changes them). Frame,
+        tiers and a fresh mirror box swap together under
+        :attr:`_publish_lock`, so every direct ask sees the whole old
+        state or the whole new one; then the replaced storage retires
+        (this handle's private frame, or its claim on a shared one-pass
+        parent; released once no read holds it, see :meth:`_retire`) and
+        so does the memo. The job path's `_restrict` reads
+        ``_df`` and tiers unlocked: at most the one ask whose filter build
+        lands inside the swap can mis-pair them, and its answer memoizes
+        into the dict the swap retires. Returns the new row count."""
+        new, rows = _materialize(frame)
+        readers = _readers(self._storage())
+        old = self._drop_claim()
+        with self._publish_lock:
+            self._df = new
+            if tiers is not None:
+                self._tiers = tiers
+            self._mirror_ref = {"df": new, "tiers": list(self.tiers), "m": None}
+        self._rollup_rows = rows
+        self._retire([old], readers)
+        self.invalidate_asks()
+        return rows
+
+    def _merge_batch_locked(self, batch_df, time_column: str) -> None:
+        """Union sketches are mergeable monoids, so the merged rollup
+        answers as a fresh build over the union would (KLL within the same
+        rank bound): the batch is sketched per bucket with the pinned
+        parameters, unioned with the stored sketches, and re-merged by
+        bucket. Late data lands in its bucket."""
+        delta = (
+            batch_df.filter(F.col(time_column).isNotNull())
+            .groupBy(*self._bucket_keys(batch_df, time_column, batch=True))
+            .agg(self._sketch_agg().alias(self._STATE))
+        )
+        self._replace(
+            self._df.unionByName(delta)
+            .groupBy(*self._grp())
+            .agg(*self._union_agg_exprs())
+        )
+
+    @_reads_storage
+    def save(self, path: str) -> str:
+        """Persist the sketch table as parquet (one distributed write) plus
+        a JSON sidecar (``_META``) pinning column, bucket width, sketch
+        parameters, key column, ladder and stale mark — without it a
+        restart loses the rollup and every estimate pays a rebuild scan.
+        Reload with :meth:`load`."""
+        self._df.write.mode("overwrite").parquet(path)
+        meta = {
+            "column": self.column,
+            "bucket_seconds": self.bucket_seconds,
+            **{p: getattr(self, p) for p in self._PARAMS},
+            "key_column": self.key_column,
+            **self._persist_meta(),
+        }
+        with open(os.path.join(path, self._META), "w") as f:
+            json.dump(meta, f)
+        return path
+
+    @classmethod
+    def load(cls, spark, path: str):
+        """Inverse of :meth:`save`: the parquet sketch table back into
+        executor cache. The sketch bytes are the state, not a derived
+        view, so reloaded answers are identical (KLL: within the same
+        rank bound — query-time merges are randomized)."""
+        with open(os.path.join(path, cls._META)) as f:
+            meta = json.load(f)
+        df, rows = _materialize(spark.read.parquet(path))
+        r = cls(
+            df,
+            meta["column"],
+            meta["bucket_seconds"],
+            *(meta[p] for p in cls._PARAMS),
+            key_column=meta.get("key_column"),
+        )
+        r._rollup_rows = rows
+        r._restore_meta(meta)
+        r._warm_mirror()  # no-op on stale loads / shim-less sessions
+        return r
+
+    def merged_sketch(self, start, end) -> bytes | None:
+        """The merged sketch bytes for ``[start, end)`` — composable with
+        sketches from other tables or partitions (union-merge downstream,
+        e.g. cross-dataset dedup or audience accounting). Same
+        both-edges-whole bucket coverage as the range asks. Memoized."""
+        self._require_fresh()
+
+        def compute() -> bytes | None:
+            row = self._restrict(start, end).agg(*self._union_agg_exprs()).collect()
+            return None if row[0][0] is None else bytes(row[0][0])
+
+        return self._memoized_ask(
+            ("sketch", self._ask_token(start), self._ask_token(end)), compute
+        )
+
+    def unpersist(self) -> None:
+        """Release the storage that holds the sketches — this handle's
+        private frame, or its claim on a shared one-pass parent (the
+        parent goes with the last claim) — and every frame a publish
+        retired, read or not."""
+        old = self._drop_claim()
+        self._sweep_retired(force=True)
+        if old is not None:
+            old.unpersist()
 
     # ------------------------------------------------ direct (zero-job) asks
     #: r10: the frequency family's driver-mirror economics extended to the
@@ -461,17 +799,13 @@ class SketchRetention:
         self._mirror_ref = None
         self._jvm_ops = _MEMO_MISS  # session could differ after load
 
-    def _warm_mirror(self, col: str) -> None:
+    def _warm_mirror(self, col: str | None = None) -> None:
         """Eager warm on fresh builds/loads (the r9 zero-job-from-the-
         start discipline) — but only when the session can actually serve
         direct asks; stale loads stay lazy (collects they could never
-        serve)."""
+        serve). ``col`` defaults to the family's state column."""
         if not self.stale and self._sketch_ops() is not None:
-            self._bytes_mirror(col)
-
-    #: "no key restriction" sentinel for _direct_frame — None is a real
-    #: (NULL-partition) ask value, so absence needs its own object
-    _NO_ASK = object()
+            self._bytes_mirror(col or self._STATE)
 
     #: Key-column SQL types whose SAME-TYPE Python equality IS Spark's
     #: equality — the only keyed asks the direct path serves (r11, the
@@ -1625,11 +1959,12 @@ class SketchRetention:
         silently dropping the batch's rows — and hoisting the wrapper
         here makes every family participate, including overrides).
         Families implement :meth:`_merge_batch_locked`; see each for the
-        family's merge semantics."""
-        from pyspark import StorageLevel
-
+        family's merge semantics. A merge that finds the cache dropped
+        marks the rollup stale and raises (:meth:`_read_storage`)."""
         with self._mutate_lock:
-            self._merge_batch_locked(batch_df, time_column, StorageLevel)
+            self._read_storage(
+                lambda: self._merge_batch_locked(batch_df, time_column)
+            )
 
     def compact_before(self, cutoff_sec: int, width: int) -> int:
         """Roll buckets older than ``cutoff_sec`` into ``width``-second
@@ -1639,59 +1974,110 @@ class SketchRetention:
         Returns rows reclaimed. Repeated calls with growing cutoffs
         implement the hour→day→week ladder, bounding rollup rows (and
         persisted sidecar size) on endless streams."""
-        from pyspark import StorageLevel
-
         with self._mutate_lock:
-            return self._compact_before_locked(cutoff_sec, width, StorageLevel)
+            return self._read_storage(
+                lambda: self._compact_before_locked(cutoff_sec, width)
+            )
 
-    def _compact_before_locked(self, cutoff_sec: int, width: int, StorageLevel) -> int:
+    def _span_rows(self, cutoff: int) -> tuple[int, int]:
+        """``(rows before cutoff, all rows)`` of the current frame in ONE
+        job — with the new frame's count, enough to price a compaction."""
+        row = self._df.agg(
+            F.count(F.when(F.col("__sec") < cutoff, 1)).alias("s"),
+            F.count(F.lit(1)).alias("n"),
+        ).collect()[0]
+        return row["s"], row["n"]
+
+    def _compact_before_locked(self, cutoff_sec: int, width: int) -> int:
         self.check_compact(cutoff_sec, width)
         cutoff = cutoff_sec - (cutoff_sec % width)
         if width == self.bucket_seconds and not self.tiers:
             return 0
-        old = self._df
-        in_span = F.col("__sec") < cutoff
-        before = old.filter(in_span).count()
+        before, total = self._span_rows(cutoff)
         if before == 0:
             return 0
+        in_span = F.col("__sec") < cutoff
         gcols = [(F.col("__sec") - (F.col("__sec") % width)).alias("__sec")]
         if self.key_column is not None:
             gcols.append(F.col("__key"))
+        old = self._df
         coarse = old.filter(in_span).groupBy(*gcols).agg(*self._union_agg_exprs())
-        merged = (
-            coarse.unionByName(old.filter(~in_span).select(*coarse.columns))
-            .coalesce(self._SKETCH_CACHE_PARTITIONS)
-            .persist(StorageLevel.MEMORY_AND_DISK)
+        # the rows outside the span are unchanged, so the span shrank by
+        # exactly the total's shrink
+        return total - self._replace(
+            coarse.unionByName(old.filter(~in_span).select(*coarse.columns)),
+            tiers=[(cutoff, width)],
         )
-        after = merged.filter(in_span).count()  # also materializes the cache
-        # Atomic (frame, tiers, box) publication under the lock
-        # _mirror_box holds around its read-check-create (r11 review
-        # passes 1-2): ordering tricks cannot make a two-attribute pair
-        # coherent against a reader preempted between the reads, and a
-        # pre-published box can be clobbered by a racing identity-mismatch
-        # rebuild. With both sides serialized, every direct ask observes
-        # either the complete old state or the complete new one. The
-        # published box is the new mirror holder (m=None collects
-        # lazily) — no _drop_mirror, which would discard the pairing.
-        # (The JOB path's _restrict still reads _df and tiers unlocked —
-        # the pre-existing r10 exposure: at most the ONE ask whose filter
-        # build lands inside this with-block can mis-pair them, and its
-        # answer cannot persist — it memoizes into the pre-invalidate
-        # dict, which the invalidate_asks below retires. Closing it fully
-        # would thread a locked snapshot through every family's
-        # _restrict; documented instead, matching the job path's
-        # bounded-staleness contract.)
-        new_tiers = [(cutoff, width)]
-        with self._publish_lock:
-            self._df = merged
-            self._tiers = new_tiers
-            self._mirror_ref = {
-                "df": merged,
-                "tiers": list(new_tiers),
-                "m": None,
-            }
-        detach = getattr(self, "_detach_shared", None)
-        if not (detach() if detach is not None else False):
-            old.unpersist()
-        self.invalidate_asks()
-        return before - after
+
+
+def build_sketch_rollups(
+    df: DataFrame,
+    time_column: str,
+    distinct: tuple[str, ...] | list[str] = (),
+    quantile: tuple[str, ...] | list[str] = (),
+    theta: tuple[str, ...] | list[str] = (),
+    bucket_seconds: int = 3600,
+    lg_k: int = 12,
+    k: int = 200,
+    partition_by: str | None = None,
+) -> dict[str, dict]:
+    """Every requested union-sketch family's rollups from ONE scan of
+    ``df`` — the one function behind every sketch build (single-column,
+    per-family multi-column and cross-family). The families aggregate over
+    the identical key (bucket second, plus the optional partition key), so
+    one group-by computes every sketch column; at scale the scan is the
+    whole build cost.
+
+    Returns ``{"distinct": {col: DistinctRollup}, "quantile":
+    {col: QuantileRollup}, "theta": {col: ThetaRollup}}`` with every
+    mirror warmed for zero-job direct asks. ``lg_k`` sizes the HLL and
+    theta sketches, ``k`` the KLL sketches. Every handle is a view over
+    one refcounted parent frame, released when the last sibling
+    unpersists or merges away (:meth:`SketchRetention._drop_claim`).
+    Answers equal standalone
+    builds: HLL register maxima and theta smallest-hash sets are
+    order-independent, and KLL carries the rank-error bound of any
+    rebuild (compaction is randomized)."""
+    from .distinct import DistinctRollup
+    from .quantiles import QuantileRollup, _suffix_for
+    from .theta import ThetaRollup
+
+    asked = {"distinct": tuple(distinct), "quantile": tuple(quantile),
+             "theta": tuple(theta)}
+    if not any(asked.values()):
+        raise ValueError("at least one family's columns must be non-empty")
+    for fam, cols in asked.items():
+        if len({c.lower() for c in cols}) != len(cols):
+            # fail here, not as a refcount leak: the handles dict is keyed
+            # by column, so a duplicate would orphan one claim on the
+            # shared cache and the parent could never be released
+            raise ValueError(f"duplicate columns in {fam}={cols!r}")
+    key = partition_by
+    out: dict[str, dict] = {
+        "distinct": {
+            c: DistinctRollup(None, c, bucket_seconds, lg_k, key)
+            for c in asked["distinct"]
+        },
+        "quantile": {
+            c: QuantileRollup(None, c, bucket_seconds, k, _suffix_for(df, c), key)
+            for c in asked["quantile"]
+        },
+        "theta": {
+            c: ThetaRollup(None, c, bucket_seconds, lg_k, key)
+            for c in asked["theta"]
+        },
+    }
+    handles = [h for fam in out.values() for h in fam.values()]
+    names = [f"{h._STATE}{i}" for i, h in enumerate(handles)]
+    frame, rows = _materialize(
+        df.filter(F.col(time_column).isNotNull())
+        .groupBy(*handles[0]._bucket_keys(df, time_column))
+        .agg(*[h._sketch_agg().alias(n) for h, n in zip(handles, names)])
+    )
+    shared = {"df": frame, "refs": len(handles)}
+    for h, n in zip(handles, names):
+        h._df = frame.select(*h._grp(), F.col(n).alias(h._STATE))
+        h._shared = shared
+        h._rollup_rows = rows
+        h._warm_mirror()
+    return out

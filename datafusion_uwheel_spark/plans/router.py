@@ -1000,7 +1000,7 @@ class Router:
                 None,
             )
         if agg.func == "approx_count_distinct":
-            value: Any = int(rollup.approx_distinct(a, b))
+            ask: Any = lambda: int(rollup.approx_distinct(a, b))
             sql_type = "BIGINT"
         else:
             p = float(agg.param)
@@ -1034,7 +1034,20 @@ class Router:
                     ),
                     None,
                 )
-            value = rollup.approx_quantile(p, a, b)
+            ask = lambda: rollup.approx_quantile(p, a, b)
+        try:
+            value = ask()
+        except RuntimeError:
+            if not rollup.stale:
+                raise
+            # the ask found the rollup's cache dropped and stale-marked it
+            return (
+                RouteDecision(
+                    "delegate",
+                    detail={"reason": f"no fresh unkeyed rollup for {agg.arg!r}"},
+                ),
+                None,
+            )
         names = [agg.output_name]
         rows = [(value,)]
         if q.order_by or q.limit is not None:

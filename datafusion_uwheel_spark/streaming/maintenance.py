@@ -145,7 +145,13 @@ class StreamingWheelMaintainer:
                     )
                 elif not rollup.stale:  # a stale rollup stays stale —
                     # later batches cannot repair the rows already missed
-                    rollup.merge_batch(batch_df, self.engine.time_column)
+                    try:
+                        rollup.merge_batch(batch_df, self.engine.time_column)
+                    except RuntimeError:
+                        # the merge found the rollup's cache dropped and
+                        # stale-marked it: keep the stream alive
+                        if not rollup.stale:
+                            raise
         maintained = set(self.filters) | {STAR_AGGREGATION_ALIAS}
         e = self.engine
         if self.maintain_partitions:

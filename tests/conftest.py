@@ -3,7 +3,9 @@ golden fixture (FIXTURES.md F1), and the driver testdata paths."""
 
 from __future__ import annotations
 
+import contextlib
 import os
+import types
 from datetime import datetime
 
 import pytest
@@ -19,6 +21,23 @@ SF_MEDIUM = "/root/testdata/sf0.01"
 def spark():
     s = get_spark("uwheel-spark-tests", master="local[4]", shuffle_partitions=4)
     yield s
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``with count_jobs() as jobs: ...`` then ``jobs.n``: the Spark jobs
+    the block launched — a set difference of the job ids outside any job
+    group, so the status tracker's retention cap cannot hide new jobs."""
+    tracker = spark.sparkContext.statusTracker()
+
+    @contextlib.contextmanager
+    def count():
+        jobs = types.SimpleNamespace(n=None)
+        before = set(tracker.getJobIdsForGroup(None) or [])
+        yield jobs
+        jobs.n = len(set(tracker.getJobIdsForGroup(None) or []) - before)
+
+    return count
 
 
 @pytest.fixture(scope="session")
